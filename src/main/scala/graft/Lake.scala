@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 import graft.core.SchemaRegistry
 import graft.gold.GoldRunner
@@ -58,6 +59,13 @@ final class Lake(val spark: SparkSession, val root: String) {
     // another Lake instance in the same session) used a different location
     spark.sql(s"DROP TABLE IF EXISTS $db.$table")
     spark.catalog.createTable(s"$db.$table", path, "parquet")
+    // a partitioned table reads only the partitions its catalog entry
+    // lists, and a new entry lists none; a non-partitioned table rejects
+    // the call. Writers re-register after each commit, so partitions a
+    // later write adds are picked up here too.
+    if (spark.sessionState.catalog.getTableMetadata(TableIdentifier(table, Some(db)))
+        .partitionColumnNames.nonEmpty)
+      spark.catalog.recoverPartitions(s"$db.$table")
     // lets path-level writers scope post-merge cache invalidation to
     // this one relation instead of the whole catalog
     graft.core.TableIndex.register(path, s"$db.$table")

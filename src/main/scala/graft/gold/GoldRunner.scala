@@ -2,8 +2,10 @@ package graft.gold
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
+import java.util.concurrent.{CompletableFuture, CompletionException,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
 
 import graft.Lake
 import graft.query.NameRewriter
@@ -15,8 +17,10 @@ import graft.silver.Upsert
   * Per job: rewrite `domain.layer.table` references → catalog names, run
   * the SQL through Catalyst, write by mode, register the gold table, and
   * record a status file (entrypoint.py:465-488). Scheduled runs execute
-  * all active jobs whose effective tag matches, in dependency
-  * (topological) order — replacing dbt's `ref()` DAG (entrypoint.py:86-160).
+  * all active jobs whose effective tag matches, replacing dbt's `ref()`
+  * DAG (entrypoint.py:86-160): each job starts as soon as every selected
+  * job it depends on has committed, so independent jobs overlap as
+  * concurrent Spark jobs (see [[runScheduled]]).
   *
   * Write modes: overwrite | append | upsert-by-unique-key. NOTE: the
   * reference's live path silently treats append+unique_key as OVERWRITE
@@ -57,14 +61,60 @@ final class GoldRunner(lake: Lake) {
     }
   }
 
-  /** Run all active jobs for a domain whose effective tag matches, in
-    * dependency order (O1 + O2 + O4). */
+  /** Run all active jobs for a domain whose effective tag matches (O1 +
+    * O2 + O4), driven by their dependencies instead of one at a time.
+    *
+    * Each job starts once every dependency selected in this call has
+    * committed (a dependency on a job that is not selected — another tag,
+    * or inactive — does not run here and is not waited for), so a job
+    * always reads its upstream's output from this run. Jobs run on a pool
+    * this call owns, min(selected jobs, `defaultParallelism`) threads, so
+    * independent jobs overlap as concurrent Spark jobs; the pool is shut
+    * down and its threads joined before the call returns.
+    *
+    * Failures follow `dbt run` without `--fail-fast`: a failed job's
+    * transitive dependents do not start, every independent job still runs
+    * and writes its status, and once every started job has settled the
+    * first failure in topological order is thrown. Results come back in
+    * [[TagScheduler.topoOrder]] order.
+    *
+    * perfbench's traced medallion run calls [[runJob]] one job at a time
+    * to time each job, so its `gold.dag_s` is the serial sum, not this. */
   def runScheduled(domain: String, tag: String): Seq[RunResult] = {
     val jobs = lake.registry.listGoldJobs(domain).filter(_.status == "active")
     val tags = TagScheduler.effectiveTags(jobs)
-    TagScheduler.topoOrder(jobs)
-      .filter(j => tags(j.jobName) == tag)
-      .map(runJob)
+    val order = TagScheduler.topoOrder(jobs).filter(j => tags(j.jobName) == tag)
+    if (order.isEmpty) return Nil
+    val size = math.min(order.size, lake.spark.sparkContext.defaultParallelism)
+    val threads = ArrayBuffer.empty[Thread]
+    val pool = new ThreadPoolExecutor(size, size, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-gold-$domain-${threads.size}")
+        t.setDaemon(true); threads += t; t
+      })
+    // a worker inherits Spark's thread-local job properties (scheduler
+    // pool, job group) from the thread that creates it: create them all
+    // here so they carry the caller's, never a finished job's
+    pool.prestartAllCoreThreads()
+    try {
+      // topological order: every upstream future exists before its
+      // dependents; a failed upstream fails the dependent unstarted
+      val runs = order.foldLeft(Map.empty[String, CompletableFuture[RunResult]]) { (m, j) =>
+        val upstream = j.dependencies.flatMap(m.get)
+        m + (j.jobName -> CompletableFuture.allOf(upstream: _*)
+          .thenApplyAsync[RunResult](_ => runJob(j), pool))
+      }
+      CompletableFuture.allOf(runs.values.toSeq: _*).handle[Unit]((_, _) => ()).join()
+      // a skipped job fails with its upstream's error, and that upstream
+      // precedes it in topological order, so this throws a job's own error
+      order.map { j =>
+        try runs(j.jobName).join()
+        catch { case e: CompletionException => throw e.getCause }
+      }
+    } finally {
+      pool.shutdown()
+      threads.foreach(_.join())
+    }
   }
 
   /** last_execution.yaml: status, timestamp, output ≤5000 chars

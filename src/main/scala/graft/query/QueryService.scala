@@ -42,7 +42,7 @@ final class QueryService(lake: Lake) {
     val verdict = QueryGuard.validate(lake.spark, sql2)
     if (!verdict.ok) return Left(verdict.reason)
     try {
-      val df = dataFrame(sql2)
+      val df = resolved(sql2)
       val taken: Array[Row] = df.take(MaxResultRows + 1)
       val truncated = taken.length > MaxResultRows
       val rows = taken.take(MaxResultRows).toSeq.map(_.toSeq)
@@ -58,9 +58,12 @@ final class QueryService(lake: Lake) {
     * the optimizer-batch copy of the rule only sees runtime-empty
     * plans (EmptyGroupingSetsRule scaladoc). */
   def dataFrame(sql: String): DataFrame =
+    resolved(StarRewriter.rewrite(QualifyRewriter.rewrite(sql)))
+
+  /** [[dataFrame]] for SQL whose dialect shims have already run. */
+  private def resolved(sql: String): DataFrame =
     graft.plans.EmptyGroupingSetsRule.applyAnalyzed(
-      lake.spark.sql(NameRewriter.rewrite(lake,
-        StarRewriter.rewrite(QualifyRewriter.rewrite(sql)))))
+      lake.spark.sql(NameRewriter.rewrite(lake, sql)))
 
   /** Error sanitization (query_api/main.py:186-207): missing relations →
     * "does not exist or has no data"; object-store URIs and internal

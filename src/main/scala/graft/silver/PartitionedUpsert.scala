@@ -49,12 +49,10 @@ object PartitionedUpsert {
     val target = spark.read.parquet(tablePath)
       .filter(col(partitionCol).isin(touched: _*))
     val merged = Upsert.merge(target, source, keys)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.partitionBy(partitionCol).mode("overwrite").parquet(tablePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // per-write option, never the session conf: a concurrent writer that
+    // saw the session flipped back to static would delete every untouched
+    // partition
+    merged.write.option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).mode("overwrite").parquet(tablePath)
   }
 }

@@ -37,6 +37,13 @@ class PartitionedUpsertSpec extends AnyFunSuite {
       """{"metric_id": 2, "day": "2024-01-02", "value": 2.0}"""))
     lake.ingest.flushAll()
     lake.silver.processEndpoint("ops", "metrics")
+    // the catalog table and the query API see every partition's rows
+    def readsThrough(n: Long): Unit = {
+      assert(spark.table("ops_silver.metrics").count() == n)
+      assert(lake.query.run("SELECT count(*) AS n FROM ops.silver.metrics")
+        .toOption.get.rows == Seq(Seq(n)))
+    }
+    readsThrough(2)
     // the silver table is physically partitioned by day
     val dirs = Files.list(Paths.get(lake.silverPath("ops", "metrics")))
       .iterator().asScala.map(_.getFileName.toString).toSet
@@ -49,6 +56,16 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     val df = lake.silver.processEndpoint("ops", "metrics").get
     assert(df.count() == 3)
     assert(df.filter("metric_id = 1").select("value").head().getDouble(0) == 9.0)
+    readsThrough(3)
+    // third batch adds a partition the catalog entry has not seen yet
+    lake.ingest.ingest("ops", "metrics", Seq(
+      """{"metric_id": 4, "day": "2024-01-03", "value": 4.0}"""))
+    lake.ingest.flushAll()
+    lake.silver.processEndpoint("ops", "metrics")
+    readsThrough(4)
+    assert(lake.query.run(
+      "SELECT value FROM ops.silver.metrics WHERE day = '2024-01-03'")
+      .toOption.get.rows == Seq(Seq(4.0)))
   }
 
   test("merge rewrites only the touched partitions") {
@@ -80,6 +97,44 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     assert(post.keys.exists(_.contains("day=2024-01-01")))
     assert(before.keySet.filter(_.contains("day=2024-01-01")) !=
       post.keySet.filter(_.contains("day=2024-01-01")))
+  }
+
+  test("merge overwrites partitions dynamically without touching the session conf") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-pconf-").toString + "/t"
+    PartitionedUpsert.writeMerged(
+      Seq((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b")).toDF("id", "day", "v"),
+      path, Seq("id"), "day")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // under a static session conf a plain overwrite would delete 2024-01-02
+    spark.conf.set(key, "static")
+    // SQL confs ride each job's properties: record what the merge's jobs saw
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(js.properties.getProperty(key)))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      PartitionedUpsert.writeMerged(Seq((1L, "2024-01-01", "a2")).toDF("id", "day", "v"),
+        path, Seq("id"), "day")
+      // listener events ride the async bus — wait until stable
+      var prev = -1
+      val deadline = System.nanoTime() + 10000000000L
+      while ((seen.isEmpty || prev != seen.size) && System.nanoTime() < deadline) {
+        prev = seen.size; Thread.sleep(200)
+      }
+      assert(spark.conf.get(key) == "static")
+      // (jobs outside a SQL execution, like file listing, carry no confs)
+      assert(seen.contains("static") && !seen.contains("dynamic"),
+        s"merge jobs saw the session conf as ${seen.asScala.toSeq}")
+      assert(spark.read.parquet(path).select("id", "v").as[(Long, String)]
+        .collect().toMap == Map(1L -> "a2", 2L -> "b"))
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.conf.unset(key)
+    }
   }
 
   test("reads with a partition predicate are partition-pruned at the scan") {
