@@ -9,7 +9,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import graft.Lake
 import graft.query.NameRewriter
-import graft.silver.Upsert
+import graft.silver.{BucketedState, Upsert}
 
 /** Gold transform-job execution — the engine replacement for the
   * dbt+DuckDB ECS container (containers/dbt_runner/entrypoint.py:495-580).
@@ -51,7 +51,7 @@ final class GoldRunner(lake: Lake) {
           Upsert.writeMerged(result, path, job.uniqueKey)
       }
       lake.registerTable(job.domain, "gold", job.jobName, path)
-      val rows = spark.read.parquet(path).count()
+      val rows = committedRows(path)
       writeStatus(job, "success", s"rows=$rows started=$started")
       RunResult(job, rows, "success")
     } catch {
@@ -116,6 +116,17 @@ final class GoldRunner(lake: Lake) {
       threads.foreach(_.join())
     }
   }
+
+  /** Rows in the table at `path`: the sum of its data files' Parquet
+    * footer counts, read on the driver with no Spark job. Data files are
+    * the names Spark's file index lists (no `_` or `.` prefix). */
+  private def committedRows(path: String): Long =
+    graft.core.Fs.children(Paths.get(path))
+      .filterNot { p =>
+        val n = p.getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }
+      .map(BucketedState.parquetRowCount).sum
 
   /** last_execution.yaml: status, timestamp, output ≤5000 chars
     * (entrypoint.py:465-488). */

@@ -86,7 +86,9 @@ final class SilverProcessor(lake: Lake) {
     }
     lake.registry.registerSilver(domain, name, path)
     lake.registerTable(domain, "silver", name, path)
-    spark.read.parquet(path)
+    // the catalog relation just registered: its schema is stored, so
+    // unlike a path read this runs no footer-inference job
+    spark.table(s"${domain}_silver.$name")
   }
 
   /** A column whose description carries the `partition` marker opts the

@@ -67,12 +67,22 @@ object Upsert {
     * count — doublings are logarithmic in table growth, so the
     * amortized per-batch cost stays O(batch + touched buckets).
     *
+    * The floor, when the caller passes no `numBuckets` (0), is
+    * min(32, `defaultParallelism`): one file per core. Every bucket
+    * file costs a Parquet write task (~90 ms of task time on 4 local
+    * cores, SCALING.md) whatever its size, and a file open per query,
+    * so below the byte target the COUNT, not the data, sets the merge
+    * and read cost; at one file per core a merge touching every bucket
+    * runs one wave of write tasks. On 32+ cores the floor is 32, and a
+    * live store keeps its count (eff = max(floor, live)).
+    *
     * Cost note: `source` is evaluated twice on the keyed path (bucket
     * probe + staged write) — parquet/JSON-backed batches re-scan
     * cheaply; persist an expensive computed source before calling. */
   def writeMerged(source: DataFrame, tablePath: String, keys: Seq[String],
-      numBuckets: Int = 32,
+      numBuckets: Int = 0,
       targetBucketBytes: Long = 256L * 1024 * 1024): Unit = {
+    require(numBuckets >= 0, s"numBuckets must be >= 0, got $numBuckets")
     val spark = source.sparkSession
     val path = Paths.get(tablePath)
     healSwap(path)
@@ -92,13 +102,16 @@ object Upsert {
       val gen0 = graft.core.Fence.generation(path)
       def foldMerge(slice: Option[DataFrame], delta: DataFrame): DataFrame =
         slice.map(s => merge(s, delta, keys)).getOrElse(delta)
+      val floor =
+        if (numBuckets > 0) numBuckets
+        else math.min(32, spark.sparkContext.defaultParallelism)
       BucketedState.retiredGenGuard(tablePath) {
       if (!graft.core.Fs.nonEmpty(path)) {
-        BucketedState.fold(spark, tablePath, source, keys, numBuckets,
+        BucketedState.fold(spark, tablePath, source, keys, floor,
           expectedGen = Some(gen0))(foldMerge)
       } else {
         // effective bucket count under the growth law (scaladoc above):
-        // smallest power-of-2 multiple of numBuckets that keeps buckets
+        // smallest power-of-2 multiple of the floor that keeps buckets
         // under targetBucketBytes, clamped to 4096, never shrinking
         // below the live layout's count. The live count, store bytes,
         // and read schema all come from the generation's manifest when
@@ -108,7 +121,7 @@ object Upsert {
         val manifest0 = BucketedState.readManifest(tablePath)
         val live = manifest0.map(_.numBuckets)
           .orElse(BucketedState.markerBuckets(tablePath))
-        var eff = math.max(numBuckets, live.getOrElse(numBuckets))
+        var eff = math.max(floor, live.getOrElse(floor))
         val bytes = manifest0.map(_.totalBytes)
           .getOrElse(BucketedState.storeBytes(tablePath))
         // the doubling itself must respect the cap: a non-power-of-2

@@ -52,7 +52,7 @@ object ProfileConcMerge {
       jobs.clear(); ends.clear()
       val t0 = System.currentTimeMillis
       graft.silver.Upsert.writeMerged(conc, store, Seq("o_orderkey"),
-        targetBucketBytes = 1024L * 1024)
+        numBuckets = 32, targetBucketBytes = 1024L * 1024)
       val t1 = System.currentTimeMillis
       println(s"== merge $i wall ${t1 - t0} ms ==")
       val sorted = {

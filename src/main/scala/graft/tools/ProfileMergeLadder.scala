@@ -91,13 +91,13 @@ object ProfileMergeLadder {
       // growth-law boundary to the rung's effective count, so the TIMED
       // merges below run on the settled layout (bucket bytes ≈ target)
       graft.silver.Upsert.writeMerged(orders, store, Seq("o_orderkey"),
-        targetBucketBytes = targetBytes)
+        numBuckets = 32, targetBucketBytes = targetBytes)
       val warm = orders.filter(pmod(hash(col("o_orderkey")),
           lit(MaxBuckets)) === 0).limit(10)
         .withColumn("o_totalprice", col("o_totalprice") + 0.5)
       val (wWall, wRd, wWr) = measured {
         graft.silver.Upsert.writeMerged(warm, store, Seq("o_orderkey"),
-          targetBucketBytes = targetBytes)
+          numBuckets = 32, targetBucketBytes = targetBytes)
       }
       val storeBytes = graft.silver.BucketedState.storeBytes(store)
       val eff = graft.silver.BucketedState.markerBuckets(store)
@@ -114,7 +114,7 @@ object ProfileMergeLadder {
         batch.count()
         val (wall, rd, wr) = measured {
           graft.silver.Upsert.writeMerged(batch, store, Seq("o_orderkey"),
-            targetBucketBytes = targetBytes)
+            numBuckets = 32, targetBucketBytes = targetBytes)
         }
         println(s"""{"rung":"$sfDir","store_bytes":$storeBytes,""" +
           s""""regime":"concentrated","merge":$i,"batch_rows":$concRows,""" +
@@ -129,7 +129,7 @@ object ProfileMergeLadder {
       uni.count()
       val (uWall, uRd, uWr) = measured {
         graft.silver.Upsert.writeMerged(uni, store, Seq("o_orderkey"),
-          targetBucketBytes = targetBytes)
+          numBuckets = 32, targetBucketBytes = targetBytes)
       }
       println(s"""{"rung":"$sfDir","store_bytes":$storeBytes,""" +
         s""""regime":"uniform","batch_rows":5000,"wall_s":${r3(uWall)},""" +

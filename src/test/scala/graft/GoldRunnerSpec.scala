@@ -80,6 +80,28 @@ class GoldRunnerSpec extends AnyFunSuite {
     }
   }
 
+  test("runJob's rows equal the committed table's count after an " +
+      "overwrite, two appends and an upsert") {
+    val lake = newLake()
+    def run(job: GoldJob, expect: Long): Unit = {
+      val r = lake.gold.runJob(job)
+      assert(r.rows == spark.table(s"d_gold.${job.jobName}").count(), job)
+      assert(r.rows == expect, job)
+      assert(field(status(lake, job.jobName).get, "output")
+        .startsWith(s"rows=$expect "))
+    }
+    run(GoldJob("d", "ow", "SELECT id FROM range(50)"), 50)
+    run(GoldJob("d", "ow", "SELECT id FROM range(7)"), 7)
+    val app = GoldJob("d", "app", "SELECT id FROM range(30)", writeMode = "append")
+    run(app, 30)
+    run(app, 60)
+    run(GoldJob("d", "up", "SELECT id, 'a' AS v FROM range(100)",
+      writeMode = "upsert", uniqueKey = Seq("id")), 100)
+    // 50 re-sent keys update in place, 50 new keys insert
+    run(GoldJob("d", "up", "SELECT id, 'b' AS v FROM range(50, 150)",
+      writeMode = "upsert", uniqueKey = Seq("id")), 150)
+  }
+
   test("a failed job skips its dependents, independent jobs still commit, " +
       "and its error is thrown after all settle") {
     val lake = newLake()

@@ -34,6 +34,15 @@ class SilverBucketedSpec extends AnyFunSuite {
     df.select(col("id").cast("long"), col("v")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
 
+  /** The count a new keyed table starts at when no count is passed. */
+  private def defaultCount: Int =
+    math.min(32, spark.sparkContext.defaultParallelism)
+
+  /** The bucket count the live store was written under. */
+  private def liveCount(path: String): Int =
+    BucketedState.markerBuckets(path).getOrElse(
+      fail(s"$path has no bucket marker"))
+
   private def fileNames(path: String): Map[Int, Set[String]] =
     BucketedState.bucketFiles(path).map { case (b, ps) =>
       b -> ps.map(_.getFileName.toString).toSet
@@ -50,8 +59,10 @@ class SilverBucketedSpec extends AnyFunSuite {
     // a batch confined to the buckets of ids 1..8
     val batch = (1L to 8L).map(i => (i, s"new-$i")).toDF("id", "v")
     val expectTouched = base.filter(col("id") <= 8)
-      .select(pmod(hash(col("id")), lit(32)).cast("int").as("b"))
+      .select(pmod(hash(col("id")), lit(liveCount(path))).cast("int").as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
+    assert(before.keySet.exists(!expectTouched(_)),
+      s"degenerate fixture: the batch touches every bucket of $before")
     Upsert.writeMerged(batch, path, Seq("id"))
     val after = fileNames(path)
     for ((b, names) <- before if !expectTouched(b))
@@ -64,6 +75,46 @@ class SilverBucketedSpec extends AnyFunSuite {
     val expect = (1L to 400L)
       .map(i => i -> (if (i <= 8) s"new-$i" else s"base-$i")).toMap
     assert(got == expect)
+  }
+
+  test("a new keyed table written with no count starts at one bucket " +
+      "per core, at most 32 — in its marker and its manifest") {
+    import spark.implicits._
+    val path = tmpTable()
+    Upsert.writeMerged((1L to 400L).map(i => (i, s"v-$i")).toDF("id", "v"),
+      path, Seq("id"))
+    assert(BucketedState.markerBuckets(path).contains(defaultCount))
+    assert(BucketedState.readManifest(path).map(_.numBuckets)
+      .contains(defaultCount))
+    // one file per bucket, every bucket live
+    assert(fileNames(path).map { case (b, ns) => b -> ns.size } ==
+      (0 until defaultCount).map(_ -> 1).toMap)
+    assert(spark.read.parquet(path).count() == 400)
+  }
+
+  test("a store written at numBuckets = 32 keeps 32 under a default " +
+      "merge; its next narrow fold carries untouched files by name") {
+    import spark.implicits._
+    val path = tmpTable()
+    Upsert.writeMerged((1L to 400L).map(i => (i, s"base-$i")).toDF("id", "v"),
+      path, Seq("id"), numBuckets = 32)
+    val before = fileNames(path)
+    assert(before.keySet == (0 until 32).toSet)
+    val batch = Seq((1L, "new-1"), (2L, "new-2")).toDF("id", "v")
+    val touched = batch
+      .select(pmod(hash(col("id")), lit(32)).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    Upsert.writeMerged(batch, path, Seq("id"))
+    assert(BucketedState.markerBuckets(path).contains(32))
+    assert(BucketedState.readManifest(path).map(_.numBuckets).contains(32))
+    val after = fileNames(path)
+    assert(after.keySet == before.keySet, "the store was re-bucketed")
+    for ((b, names) <- before)
+      if (touched(b)) assert(after(b) != names, s"touched bucket $b kept its file")
+      else assert(after(b) == names, s"untouched bucket $b was rewritten")
+    val got = idsOf(spark.read.parquet(path))
+    assert(got == (1L to 400L).map(i => i -> (i match {
+      case 1L => "new-1"; case 2L => "new-2"; case _ => s"base-$i" })).toMap)
   }
 
   test("an INT batch key folds into a BIGINT-keyed table under the " +
@@ -102,7 +153,7 @@ class SilverBucketedSpec extends AnyFunSuite {
     val before = fileNames(path)
     val batch = Seq((2L, "v-2b", "y")).toDF("id", "v", "extra")
     val touched = spark.range(2, 3)
-      .select(pmod(hash(col("id")), lit(32)).cast("int").as("b"))
+      .select(pmod(hash(col("id")), lit(liveCount(path))).cast("int").as("b"))
       .collect().map(_.getInt(0)).toSet
     Upsert.writeMerged(batch, path, Seq("id"))
     val after = fileNames(path)
@@ -121,7 +172,7 @@ class SilverBucketedSpec extends AnyFunSuite {
     Upsert.writeMerged(Seq((1L, "new-1")).toDF("id", "v"), path, Seq("id"))
     assert(fileNames(path).nonEmpty)
     assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_graft_state_buckets_32")))
+      java.nio.file.Paths.get(path, s"_graft_state_buckets_$defaultCount")))
     val got = idsOf(spark.read.parquet(path))
     assert(got.size == 100 && got(1L) == "new-1" && got(2L) == "old-2")
   }
@@ -137,7 +188,8 @@ class SilverBucketedSpec extends AnyFunSuite {
       .map(s => ((i * 2654435761L + s * 40503L) & 0xffffffffL).toHexString)
       .mkString("-")
     Upsert.writeMerged((1L to 30000L).map(i => (i, pay(i)))
-      .toDF("id", "v"), path, Seq("id"), targetBucketBytes = tiny)
+      .toDF("id", "v"), path, Seq("id"), numBuckets = 32,
+      targetBucketBytes = tiny)
     assert(BucketedState.markerBuckets(path).contains(32),
       "bootstrap must start at the requested count")
     // the law reads the LIVE store's bytes — compute the expected count
@@ -201,10 +253,10 @@ class SilverBucketedSpec extends AnyFunSuite {
     val base = (1L to 500L).map(i => (i, s"base-$i")).toDF("id", "v")
     Upsert.writeMerged(base, path, Seq("id"))
     // count the write-stage tasks of a narrow fold: must be |touched|,
-    // not the 32-bucket cap (the r13 ladder's wall law)
+    // not the store's bucket count (the r13 ladder's wall law)
     val batch = Seq((1L, "n1"), (2L, "n2")).toDF("id", "v")
     val touched = batch
-      .select(pmod(hash(col("id")), lit(32)).cast("int").as("b"))
+      .select(pmod(hash(col("id")), lit(liveCount(path))).cast("int").as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
     val maxTasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -239,7 +291,7 @@ class SilverBucketedSpec extends AnyFunSuite {
     val gen = graft.core.Fence.generation(java.nio.file.Paths.get(path))
     val e = intercept[Exception] {
       BucketedState.fold(spark, path, Seq((1L, "x")).toDF("id", "v"),
-        Seq("id"), 32, expectedGen = Some(gen)) { (_, delta) =>
+        Seq("id"), liveCount(path), expectedGen = Some(gen)) { (_, delta) =>
         delta.unionByName(Seq((999999L, "escapee")).toDF("id", "v"))
       }
     }
