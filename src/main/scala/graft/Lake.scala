@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 import graft.core.SchemaRegistry
 import graft.gold.GoldRunner
 import graft.ingest.IngestService
-import graft.query.{CatalogService, QueryService}
+import graft.query.{BronzeReader, CatalogService, QueryService}
 import graft.silver.SilverProcessor
 
 /** The engine facade: one warehouse directory holding the medallion layout
@@ -36,13 +36,20 @@ final class Lake(val spark: SparkSession, val root: String) {
   graft.plans.LakeResolutionRule.setRoot(spark, root)
   // DuckDB-dialect grouping-sets semantics on every query this lake
   // serves (empty-input ROLLUP/CUBE grand-total row — see the rule).
-  // Null-guarded like setRoot above: registry-only tests construct a
-  // Lake without a session.
+  // Null-guarded: registry-only tests construct a Lake without a session.
   if (spark != null) graft.plans.EmptyGroupingSetsRule.install(spark)
 
   def bronzePath(domain: String, name: String): String = s"$root/bronze/$domain/$name"
   def silverPath(domain: String, name: String): String = s"$root/silver/$domain/$name"
   def goldPath(domain: String, name: String): String = s"$root/gold/$domain/$name"
+
+  /** One endpoint's bronze JSONL as a schema-on-read relation, or None
+    * when the endpoint has no bronze directory. Every bronze reader (the
+    * query API's name rewriter, the Catalyst resolution rule, the bronze
+    * stream's start schema) comes through [[graft.query.BronzeReader]],
+    * which memoizes the inferred schema against the file listing. */
+  def bronze(domain: String, name: String): Option[DataFrame] =
+    BronzeReader.read(spark, bronzePath(domain, name))
 
   val ingest = new IngestService(this)
   val silver = new SilverProcessor(this)

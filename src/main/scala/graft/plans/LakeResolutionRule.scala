@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
@@ -20,9 +18,10 @@ import org.apache.spark.sql.types.StructType
   * An `UnresolvedRelation(Seq(domain, layer, table))` is rewritten to:
   *  - silver/gold: `UnresolvedRelation(Seq(s"${domain}_$layer", table))`
   *    — the session-catalog database the processors register;
-  *  - bronze: the logical plan of a schema-merged JSON read over the
-  *    bronze directory (the `read_json_auto(union_by_name=true)`
-  *    equivalent), resolved eagerly since bronze is schema-on-read.
+  *  - bronze: the logical plan of `BronzeReader.read` (what `Lake.bronze`
+  *    returns), the schema-merged JSON read over the bronze directory (the
+  *    `read_json_auto(union_by_name=true)` equivalent), resolved eagerly
+  *    since bronze is schema-on-read.
   *
   * Operating on the PLAN rather than the string means quoted literals,
   * comments and subqueries can never be corrupted by the rewrite — the
@@ -41,12 +40,9 @@ final class LakeResolutionRule(spark: SparkSession) extends Rule[LogicalPlan] {
             if layers(layer.toLowerCase) =>
           layer.toLowerCase match {
             case "bronze" =>
-              val dir = s"$root/bronze/$domain/$table"
-              if (Files.exists(Paths.get(dir)))
-                spark.read.option("recursiveFileLookup", "true")
-                  .json(s"$dir/*.jsonl").queryExecution.analyzed
-              else UnresolvedRelation(
-                Seq(s"${domain}_bronze_$table"), options, isStreaming)
+              graft.query.BronzeReader.read(spark, s"$root/bronze/$domain/$table")
+                .map(_.queryExecution.analyzed).getOrElse(
+                UnresolvedRelation(Seq(s"${domain}_bronze_$table"), options, isStreaming))
             case l =>
               UnresolvedRelation(Seq(s"${domain}_$l", table), options, isStreaming)
           }

@@ -1,6 +1,5 @@
 package graft.query
 
-import java.nio.file.{Files, Paths}
 import scala.util.matching.Regex
 
 import graft.Lake
@@ -11,9 +10,9 @@ import graft.Lake
   *
   *  - `d.silver.t` / `d.gold.t`  →  session-catalog table `d_silver.t` /
   *    `d_gold.t` (registered by SilverProcessor / GoldRunner);
-  *  - `d.bronze.t` → an on-the-fly temp view over the bronze JSONL
-  *    directory, read with Spark's schema-merging JSON reader — the
-  *    `read_json_auto(..., union_by_name=true)` equivalent (S1).
+  *  - `d.bronze.t` → an on-the-fly temp view over `Lake.bronze`, the
+  *    bronze JSONL directory read with Spark's schema-merging JSON reader
+  *    — the `read_json_auto(..., union_by_name=true)` equivalent (S1).
   *
   * Kept as a pre-parse string rewrite for fidelity with the reference's
   * observable behavior. Unlike the reference's bare regex, matches
@@ -40,13 +39,7 @@ object NameRewriter {
         Some(layer match {
           case "bronze" =>
             val view = s"${domain}_bronze_$table"
-            val dir = lake.bronzePath(domain, table)
-            if (Files.exists(Paths.get(dir))) {
-              lake.spark.read
-                .option("recursiveFileLookup", "true")
-                .json(s"$dir/*.jsonl")
-                .createOrReplaceTempView(view)
-            }
+            lake.bronze(domain, table).foreach(_.createOrReplaceTempView(view))
             view
           case _ => s"${domain}_${layer}.$table"
         })

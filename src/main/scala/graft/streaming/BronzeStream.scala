@@ -30,12 +30,12 @@ final class BronzeStream(lake: Lake) {
       trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
       maxFilesPerTrigger: Int = 1000): StreamingQuery = {
     val spark = lake.spark
-    val schema = lake.registry.get(domain, name).getOrElse(
+    lake.registry.get(domain, name).getOrElse(
       throw new NoSuchElementException(s"endpoint $domain/$name not found"))
-    // bronze is schema-on-read JSONL; the stream needs an explicit schema:
-    // declared columns as loose bronze types (strings/doubles) + metadata
-    val bronzeSchema = org.apache.spark.sql.types.StructType(
-      spark.read.json(s"${lake.bronzePath(domain, name)}/*.jsonl").schema)
+    // bronze is schema-on-read JSONL, but a file stream needs its schema
+    // up front: the one inferred over the bronze files present at start
+    val bronzeSchema = lake.bronze(domain, name).map(_.schema).getOrElse(
+      throw new NoSuchElementException(s"endpoint $domain/$name has no bronze data"))
     spark.readStream
       .schema(bronzeSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
