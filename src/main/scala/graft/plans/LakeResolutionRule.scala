@@ -26,8 +26,9 @@ import org.apache.spark.sql.types.StructType
   * Operating on the PLAN rather than the string means quoted literals,
   * comments and subqueries can never be corrupted by the rewrite — the
   * analyzer only hands us real relation references. Registered through
-  * `SparkSessionExtensions` (graft.plans.LakeExtensions) or per-session
-  * via `LakeResolutionRule.install`.
+  * `SparkSessionExtensions` (graft.plans.LakeExtensions); the rule does
+  * nothing until a `Lake` built on the session sets its warehouse root
+  * (`LakeResolutionRule.setRoot`).
   */
 final class LakeResolutionRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private val layers = Set("bronze", "silver", "gold")

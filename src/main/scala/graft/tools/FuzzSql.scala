@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only differential SQL fuzz over the interactive-query surface
   * (SURVEY §2 P1/P5 + §2.8 star/QUALIFY rewriters): generates a seeded,
   * reproducible batch of random queries in the DuckDB-flavored dialect
@@ -1195,12 +1193,7 @@ object FuzzSql {
     val seed = if (args.length > 3) args(3).toLong else 20260815L
     val mode = if (args.length > 4) args(4) else "plain"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Dialect.register(spark)
     tabs.foreach(t => graft.sources.Tables.load(spark, sfDir, t.name)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: derive an ADVERSARIALLY SKEWED fixture from a driver sf dir
@@ -39,12 +39,7 @@ object MakeSkew {
     val srcDir = args(0)
     val outDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String): DataFrame =

@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling ladder for the DEFAULT medallion write path (r12 verdict
@@ -47,39 +44,15 @@ object ProfileMergeLadder {
                           // modulus sit in bucket 0 at every smaller
                           // power-of-2 count
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(8)
     spark.sparkContext.setLogLevel("WARN")
 
-    val read = new AtomicLong(0); val written = new AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          read.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-          written.addAndGet(te.taskMetrics.outputMetrics.bytesWritten)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def settle(): Unit = {
-      var prev = -1L
-      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      while (prev != read.get() + written.get() &&
-          System.nanoTime() < deadline) {
-        prev = read.get() + written.get(); Thread.sleep(200)
-      }
-    }
-    def measured[T](body: => T): (Double, Long, Long) = {
-      settle(); read.set(0); written.set(0)
-      val t0 = System.nanoTime()
-      body
-      val wall = (System.nanoTime() - t0) / 1e9
-      settle()
-      (wall, read.get(), written.get())
+    // wall, task input bytes and task output bytes of one merge
+    def measured(body: => Any): (Double, Long, Long) = {
+      val rec = Profile.record(spark)(body)
+      val stages = rec.stages.values
+      (rec.wallMs / 1e3, stages.map(_.inputBytes).sum,
+        stages.map(_.outputBytes).sum)
     }
     def r3(d: Double) = math.rint(d * 1000) / 1000
 

@@ -17,4 +17,16 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Blocks until every listener has seen every event posted so far
+    * (`listenerBus` is private[spark]). Listener events arrive
+    * asynchronously: an action can return before its job-end event is
+    * delivered. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The query execution a SQL execution's end event carries
+    * (private[sql]); null when the execution has none. */
+  def queryExecution(e: execution.ui.SparkListenerSQLExecutionEnd): execution.QueryExecution =
+    e.qe
 }
